@@ -11,6 +11,10 @@ as ratios that also behave on ``local[N]``:
 - Arrow on: every Python-boundary crossing is Arrow-batched (pandas UDFs).
 - RocksDB state store: streaming state spills to disk instead of executor heap
   (mandatory for large keyed state such as session windows over many hosts).
+- FileSystem-based checkpoint manager: without ``libhadoop`` (pyspark ships
+  none) the default FileContext manager forks ``chmod``/``stat`` per file
+  operation; with the one-pass sink, this cut a pages drain from ~428 to
+  ~122 forks per micro-batch.
 """
 
 from __future__ import annotations
@@ -21,6 +25,12 @@ from pyspark.sql import SparkSession
 
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+# Still writes a temp file and renames it, so a checkpoint file is either
+# absent or complete — the same atomicity as the FileContext default.
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -60,6 +70,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.streaming.metricsEnabled", "true")
+        .config("spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER)
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", os.environ.get("LOGFLOW_SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("LOGFLOW_DRIVER_MEM", "8g"))
@@ -93,3 +104,6 @@ def tune_for_runtime(spark: SparkSession) -> None:
     # map_concat on colliding keys (served-query enrichment) must keep the
     # later operand's value instead of throwing (default EXCEPTION)
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
+    )

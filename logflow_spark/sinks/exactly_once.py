@@ -19,7 +19,9 @@ Commit protocol per micro-batch:
   1. already committed? → return (idempotent replay no-op)
   2. write data files under data/batch_id=<b>/ (overwrite → crash debris
      from a previous half-write of the same batch is clobbered, not added)
-  3. collect per-partition row counts (lineage + metrics) with one tiny agg
+  3. list the files just written: per-partition row counts (lineage +
+     metrics) come from their parquet footers and Hive paths, so counts
+     and file list come from one listing — no persist, no second job
   4. write manifest to _commits/.<b>.json.tmp, fsync, atomic rename to
      _commits/<b>.json  — the rename IS the commit point
 
@@ -45,11 +47,31 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from typing import Sequence
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType
+
+HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_value_str(segment: str, dtype) -> str:
+    """``str()`` of the value Spark collects for a Hive partition path value.
+
+    Spark escapes path values as ``%XX`` (ASCII only) and writes null and
+    the empty string as ``__HIVE_DEFAULT_PARTITION__``; both read back as
+    null, so both count as ``None``. Booleans are spelled ``true``/``false``
+    in paths; strings, integers, dates and decimals print as ``str()`` does."""
+    v = re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), segment)
+    if v == HIVE_NULL_PARTITION:
+        return "None"
+    if isinstance(dtype, BooleanType):
+        return str(v == "true")
+    return v
 
 
 def promote_type(a, b):
@@ -205,59 +227,24 @@ class ExactlyOnceParquetSink:
         )
         batch_dir = os.path.join(self.data_dir, f"batch_id={batch_id}")
 
-        # Lineage/metrics in the same pass as the write: cache once, one
-        # tiny agg on partition columns (or a global count) after the write.
-        # Only unpersist if WE cached it — a fan-out wrapper may have cached
-        # the batch for other sinks (evicting theirs forces a source re-read).
-        was_cached = df.is_cached
-        if not was_cached:
-            df = df.persist()
-        try:
-            writer = df.write.mode("overwrite").option(
-                "compression", self.compression
-            )
-            if self.max_records_per_file:
-                # K1 rolling policy: cap file size at write time so a fat
-                # micro-batch rolls over instead of emitting one huge file
-                writer = writer.option(
-                    "maxRecordsPerFile", str(self.max_records_per_file)
-                )
-            if self.partition_by:
-                writer = writer.partitionBy(*self.partition_by)
-            writer.parquet(batch_dir)
+        # One Spark job: the write itself. Lineage/metrics are read back
+        # from what it wrote (see _written_files), so the batch is neither
+        # persisted nor scanned a second time.
+        t0 = time.perf_counter()
+        writer = df.write.mode("overwrite").option("compression", self.compression)
+        if self.max_records_per_file:
+            # K1 rolling policy: cap file size at write time so a fat
+            # micro-batch rolls over instead of emitting one huge file
+            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        writer.parquet(batch_dir)
+        t1 = time.perf_counter()
 
-            if self.partition_by:
-                pc = (
-                    df.groupBy(*self.partition_by)
-                    .agg(F.count(F.lit(1)).alias("rows"))
-                    .collect()
-                )
-                partition_counts = {
-                    "/".join(f"{k}={r[k]}" for k in self.partition_by): r["rows"]
-                    for r in pc
-                }
-                n_rows = sum(partition_counts.values())
-            else:
-                n_rows = df.count()
-                partition_counts = {"": n_rows}
-        finally:
-            if not was_cached:
-                df.unpersist()
-
-        files = []
-        for root, _dirs, names in os.walk(batch_dir):
-            for name in sorted(names):
-                if name.endswith(".parquet"):
-                    p = os.path.join(root, name)
-                    files.append(
-                        {
-                            "path": os.path.relpath(p, self.table_dir),
-                            "bytes": os.path.getsize(p),
-                        }
-                    )
+        files, partition_counts = self._written_files(batch_dir, df.schema)
         manifest = {
             "batch_id": batch_id,
-            "n_rows": n_rows,
+            "n_rows": sum(partition_counts.values()),
             "n_files": len(files),
             "partition_counts": partition_counts,
             "files": files,
@@ -267,6 +254,11 @@ class ExactlyOnceParquetSink:
             "schema": json.loads(df.schema.json()),
             "field_ids": field_ids,
             "committed_at_unix": time.time(),
+            # wall times of the data write and of the commit step (listing,
+            # footer reads, manifest build); the fsync and the rename that
+            # follow cannot be timed inside the manifest they publish
+            "write_ms": round(1000.0 * (t1 - t0), 3),
+            "commit_ms": round(1000.0 * (time.perf_counter() - t1), 3),
         }
         tmp = os.path.join(self.commits_dir, f".{batch_id}.json.tmp")
         pre_key = (
@@ -280,6 +272,31 @@ class ExactlyOnceParquetSink:
             os.fsync(f.fileno())
         os.rename(tmp, self._commit_path(batch_id))  # commit point
         self._advance_schema_cache(pre_key, df.schema)
+
+    def _written_files(self, batch_dir: str, schema) -> tuple[list[dict], dict]:
+        """Manifest file list and per-partition row counts of one listing of
+        ``batch_dir``: rows from each file's parquet footer, the partition
+        from its Hive path, keyed ``k=str(value)`` as Spark collects it."""
+        types = {f.name: f.dataType for f in schema.fields}
+        files: list[dict] = []
+        counts: dict[str, int] = {} if self.partition_by else {"": 0}
+        for root, _dirs, names in os.walk(batch_dir):
+            for name in sorted(names):
+                if not name.endswith(".parquet"):
+                    continue
+                p = os.path.join(root, name)
+                files.append(
+                    {"path": os.path.relpath(p, self.table_dir), "bytes": os.path.getsize(p)}
+                )
+                key = ""
+                if self.partition_by:
+                    segs = os.path.relpath(root, batch_dir).split(os.sep)
+                    key = "/".join(
+                        f"{k}={_partition_value_str(seg.split('=', 1)[1], types[k])}"
+                        for k, seg in zip(self.partition_by, segs)
+                    )
+                counts[key] = counts.get(key, 0) + pq.read_metadata(p).num_rows
+        return files, counts
 
     def foreach_batch(self):
         """Adapter for writeStream.foreachBatch."""
@@ -850,21 +867,7 @@ class ExactlyOnceParquetSink:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(out_dir)
 
-        files = []
-        for root, _dirs, names in os.walk(out_dir):
-            for name in sorted(names):
-                if name.endswith(".parquet"):
-                    p = os.path.join(root, name)
-                    files.append(
-                        {
-                            "path": os.path.relpath(p, self.table_dir),
-                            "bytes": os.path.getsize(p),
-                        }
-                    )
-        per_partition: dict[str, int] = {}
-        for m in snapshot:
-            for k, v in m["partition_counts"].items():
-                per_partition[k] = per_partition.get(k, 0) + v
+        files, per_partition = self._written_files(out_dir, df.schema)
         manifest = {
             "compaction_gen": gen,
             "covers_batches": covers,

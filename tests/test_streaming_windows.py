@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logflow_spark.schema import PAGES_SCHEMA
+from logflow_spark.session import CHECKPOINT_FILE_MANAGER
 from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
 from logflow_spark.sources.replay import pages_replay_stream
 from logflow_spark.streaming.topology import (
@@ -97,6 +98,12 @@ def test_late_data_dropped(spark, pages_late_dir, pages_dir):
 
 def test_exactly_once_replay_and_resume(spark, pages_dir):
     """Kill mid-stream, restart from checkpoint → no dups, no gaps."""
+    # the checkpoint is written and resumed through the FileSystem-based
+    # manager that get_spark sets
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == CHECKPOINT_FILE_MANAGER
+    )
     cfg = TopologyConfig(window_kind="tumbling", watermark="73 hours")
     batch_df = spark.read.schema(PAGES_SCHEMA).parquet(pages_dir)
     expected = _rows_set(build_windowed_topology(batch_df, cfg, streaming=False))
