@@ -470,9 +470,6 @@ def _q_event_value_quantiles(spark, sf):
     return disc_quantiles(ev, "value", (0.5, 0.95, 0.99), keys=("event_type",))
 
 
-import contextlib  # noqa: E402
-
-
 # Drain cadence for the correctness gate: max_files_per_trigger=8 puts all
 # data chunks (4) plus the flush sentinel in ONE micro-batch (a trailing
 # no-data batch advances the watermark). Every drained query's output
@@ -483,104 +480,49 @@ import contextlib  # noqa: E402
 # planning) drop ~2.5x vs the old 3-batch cadence (measured sweep: absence
 # drain 4.8s at mfpt=2 → 2.1s at mfpt=8, identical rows). Multi-batch
 # cadences stay covered by the pytest drains (mfpt=1) and crash-resume tests.
-@contextlib.contextmanager
-def _scoped_mpb(spark: SparkSession, nbytes: int):
-    """Temporarily cap spark.sql.files.maxPartitionBytes for a drain.
+def _drain(df: DataFrame, prefix: str, *, max_partition_bytes: int | None = None):
+    """Drain a streaming frame into a fresh exactly-once sink under .cache/
+    with 8 state partitions (see drain_to_sink) and return the sink; callers
+    read only its committed snapshot (``sink.read``)."""
+    import tempfile
 
-    openCostInBytes packing folds many small fixture chunks into 1-2 scan
-    splits, so the WHOLE stateless map (tokenize/gram/md5/signature work)
-    of a 50k-row micro-batch ran on 2 tasks (measured: addBatch 22 s, of
-    which state commit 1.7 s). A cap below openCost forces one split per
-    chunk file — scan parallelism = chunk count — without touching the
-    scoped shuffle-partition (state store) count."""
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(nbytes))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
+    from logflow_spark.streaming.topology import drain_to_sink
 
-
-@contextlib.contextmanager
-def _scoped_sp(spark: SparkSession, n: int):
-    """Temporarily scope shuffle partitions (= streaming state-store
-    instances) for a drain's own checkpoint. Stateful operators pay a fixed
-    per-store-per-batch cost (open/commit/snapshot) that dwarfs the data at
-    fixture scale — 8 partitions is plenty for ≤100k-row drains and saves
-    seconds per query of driver correctness budget. The conf is restored
-    afterwards; state partition count binds at checkpoint creation, so
-    per-query scoping is safe."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _await_drain(q, timeout_s: int = 600) -> None:
-    """awaitTermination with the timeout treated as an ERROR, not a result:
-    a throttled host overrunning the drain must raise loudly instead of
-    letting the caller read a partial snapshot (confusing row-count diffs
-    at the oracle gate)."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"streaming drain still running after {timeout_s}s")
+    work = tempfile.mkdtemp(prefix=prefix, dir=CACHE)
+    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
+    drain_to_sink(
+        df,
+        sink,
+        os.path.join(work, "ckpt"),
+        state_partitions=8,
+        max_partition_bytes=max_partition_bytes,
+    )
+    return sink
 
 
 def _q_pages_stream_dedup(spark, sf):
     """Streaming exact dedup at ingest: digest map-side →
     dropDuplicatesWithinWatermark (bounded keyed state) → exactly-once sink."""
-    import tempfile
-
-    from logflow_spark.schema import PAGES_SCHEMA
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.stream_dedup import streaming_distinct_digests
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_dedup_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
     deduped = streaming_distinct_digests(stream, watermark="73 hours")
-    with _scoped_sp(spark, 8):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(deduped, "stream_dedup_").read(spark)
 
 
 def _q_pages_stream_curate(spark, sf):
     """Streaming corpus curation at ingest: map-side profile → quality gate
     → first-wins digest dedup (bounded state) → exactly-once sink."""
-    import tempfile
-
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.curation_stream import streaming_curate
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_curate_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
     kept = streaming_curate(stream, watermark="73 hours")
-    with _scoped_sp(spark, 8):
-        q = (
-            kept.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(kept, "stream_curate_").read(spark)
 
 
 def _q_text_profile(spark, sf):
@@ -712,9 +654,9 @@ def _q_pack_sequences_ffd(spark, sf):
 # one drain per (process, SF): docs_stream_neardup and its _verified twin
 # both consume the SAME deterministic drained pair table; re-draining for
 # the second query would double the most expensive fixed cost in the gate.
-# Maps SF label -> committed sink table dir (parquet on disk, so a later
-# clearCache() can't invalidate it).
-_NEARDUP_DRAINS: dict[str, str] = {}
+# Maps SF label -> the drain's exactly-once sink (parquet on disk, so a
+# later clearCache() can't invalidate it).
+_NEARDUP_DRAINS: dict = {}
 
 
 def _drain_neardup_pairs(spark, sf) -> DataFrame:
@@ -727,62 +669,35 @@ def _drain_neardup_pairs(spark, sf) -> DataFrame:
     ingest span the distinct pair set equals the batch banded-join SQL over
     `documents` exactly (timestamps cancel out), so oracles need no fixture
     file."""
-    import tempfile
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from logflow_spark.fixtures.docs_stream import ensure_docs_stream_fixture
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
+    from logflow_spark.schema import DOCS_STREAM_SCHEMA
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.neardup_stream import streaming_lsh_neardup
 
     label = os.path.basename(os.path.normpath(sf))
-    if label in _NEARDUP_DRAINS:
-        # re-open through the sink so only manifest-committed files are read
-        return ExactlyOnceParquetSink(_NEARDUP_DRAINS[label]).read(spark)
-    fx = os.path.join(CACHE, f"docs_stream_{label}")
-    ensure_docs_stream_fixture(
-        fx, os.path.join(sf, "documents.parquet"), n_chunks=32
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("ingest_ts", TimestampType(), False),
-            StructField("text", StringType(), True),
-            StructField("lang", StringType(), True),
-        ]
-    )
-    work = tempfile.mkdtemp(prefix="stream_neardup_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
-    stream = replay_stream(spark, fx, schema, max_files_per_trigger=64)
-    pairs = streaming_lsh_neardup(
-        stream, id_col="doc_id", ts_col="ingest_ts",
-        horizon="73 hours", watermark="73 hours",
-    )
-    with _scoped_sp(spark, 8), _scoped_mpb(spark, 1 << 20):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
+    if label not in _NEARDUP_DRAINS:
+        fx = os.path.join(CACHE, f"docs_stream_{label}")
+        ensure_docs_stream_fixture(
+            fx, os.path.join(sf, "documents.parquet"), n_chunks=32
         )
-        _await_drain(q)
-    _NEARDUP_DRAINS[label] = sink.table_dir
-    return sink.read(spark)
+        stream = replay_stream(
+            spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=64
+        )
+        pairs = streaming_lsh_neardup(
+            stream, id_col="doc_id", ts_col="ingest_ts",
+            horizon="73 hours", watermark="73 hours",
+        )
+        _NEARDUP_DRAINS[label] = _drain(
+            pairs, "stream_neardup_", max_partition_bytes=1 << 20
+        )
+    # read through the sink so only manifest-committed files are read
+    return _NEARDUP_DRAINS[label].read(spark)
 
 
 def _q_docs_stream_neardup(spark, sf):
     """Streaming NEAR-dup candidates at ingest (round 4) — see
     _drain_neardup_pairs for the topology. A pair surfaces once per shared
     bucket; distinct is the contract."""
-    tune_for_runtime(spark)
     return _drain_neardup_pairs(spark, sf).distinct()
 
 
@@ -803,7 +718,6 @@ def _q_docs_stream_neardup_verified(spark, sf):
     directly as exact-jaccard ∩ 4x4-band-match."""
     from logflow_spark.operators.dedup import jaccard_pairs
 
-    tune_for_runtime(spark)
     cand = _drain_neardup_pairs(spark, sf).select("id_a", "id_b").distinct()
     docs = _t(spark, sf, "documents")
     return jaccard_pairs(docs, candidates=cand, threshold=0.5)
@@ -832,7 +746,7 @@ def _q_incremental_dedup(spark, sf):
 
 # decontam drain: committed sink table per (process, SF), like the
 # near-dup drain above
-_DECONTAM_DRAINS: dict[str, str] = {}
+_DECONTAM_DRAINS: dict = {}
 
 
 def _drain_decontam(spark, sf) -> DataFrame:
@@ -844,64 +758,37 @@ def _drain_decontam(spark, sf) -> DataFrame:
     with every fixture doc processed exactly once the drained report equals
     the batch SQL over `documents` (the far-future flush sentinel's own
     window never closes, so it is absent from the sink by construction)."""
-    import tempfile
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
     from logflow_spark.fixtures.docs_stream import ensure_docs_stream_fixture
     from logflow_spark.operators.decontam import _gram_hashes, eval_snippets
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
+    from logflow_spark.schema import DOCS_STREAM_SCHEMA
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.decontam_stream import streaming_decontaminate
 
     label = os.path.basename(os.path.normpath(sf))
-    if label in _DECONTAM_DRAINS:
-        return ExactlyOnceParquetSink(_DECONTAM_DRAINS[label]).read(spark)
-    fx = os.path.join(CACHE, f"docs_stream_{label}")
-    ensure_docs_stream_fixture(
-        fx, os.path.join(sf, "documents.parquet"), n_chunks=32
-    )
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), False),
-            StructField("ingest_ts", TimestampType(), False),
-            StructField("text", StringType(), True),
-            StructField("lang", StringType(), True),
-        ]
-    )
-    bench = _gram_hashes(
-        eval_snippets(_t(spark, sf, "documents")), "eval_id", "eval_text", 8
-    ).select("gh").distinct()
-    work = tempfile.mkdtemp(prefix="stream_decontam_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
-    stream = replay_stream(spark, fx, schema, max_files_per_trigger=64)
-    report = streaming_decontaminate(
-        stream, bench, watermark="1 hour", window="1 hour"
-    )
-    with _scoped_sp(spark, 8), _scoped_mpb(spark, 1 << 20):
-        q = (
-            report.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
+    if label not in _DECONTAM_DRAINS:
+        fx = os.path.join(CACHE, f"docs_stream_{label}")
+        ensure_docs_stream_fixture(
+            fx, os.path.join(sf, "documents.parquet"), n_chunks=32
         )
-        _await_drain(q)
-    _DECONTAM_DRAINS[label] = sink.table_dir
-    return sink.read(spark)
+        bench = _gram_hashes(
+            eval_snippets(_t(spark, sf, "documents")), "eval_id", "eval_text", 8
+        ).select("gh").distinct()
+        stream = replay_stream(
+            spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=64
+        )
+        report = streaming_decontaminate(
+            stream, bench, watermark="1 hour", window="1 hour"
+        )
+        _DECONTAM_DRAINS[label] = _drain(
+            report, "stream_decontam_", max_partition_bytes=1 << 20
+        )
+    return _DECONTAM_DRAINS[label].read(spark)
 
 
 def _q_docs_stream_decontam(spark, sf):
     """Streaming decontamination at ingest (new round 5) — see
     _drain_decontam. The lang='xx' filter is the house flush-sentinel
     guard (defense in depth; the sentinel can't reach the sink anyway)."""
-    tune_for_runtime(spark)
     return (
         _drain_decontam(spark, sf)
         .filter(~F.col("lang").eqNullSafe("xx"))
@@ -1110,20 +997,14 @@ def _q_pages_stream_join_native(spark, sf):
     engine evict join state, drained through the exactly-once sink.
     Inner-join results emit eagerly (no sentinel dependency); oracle is the
     batch interval-join SQL over the same files."""
-    import tempfile
-
     from logflow_spark.operators.asof_join import interval_join
     from logflow_spark.operators.windows import with_host
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import (
         enrichment_replay_stream,
         pages_replay_stream,
     )
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_join_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     pages = with_host(
         pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
     ).withWatermark("warc_ts", "73 hours")
@@ -1137,16 +1018,7 @@ def _q_pages_stream_join_native(spark, sf):
     # partition (left/right keyToNumValues/keyWithIndexToValue); at 32
     # partitions that fixed per-store cost dominates this 21k-row drain
     # (measured 18.5s vs 11.5s at sp=8, standalone)
-    with _scoped_sp(spark, 8):
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(joined, "stream_join_").read(spark)
 
 
 def _q_pages_stream_url_dedup(spark, sf):
@@ -1155,16 +1027,10 @@ def _q_pages_stream_url_dedup(spark, sf):
     to one canonical form and dropDuplicatesWithinWatermark keeps exactly
     one — urlnorm composed into the keyed-state ingest path. Oracle:
     DISTINCT canonical over the same doubled construction."""
-    import tempfile
-
     from logflow_spark.operators.urlnorm import canonical_url
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_urldedup_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
     doubled = stream.select(
         F.col("warc_ts"),
@@ -1182,16 +1048,7 @@ def _q_pages_stream_url_dedup(spark, sf):
         .dropDuplicatesWithinWatermark(["curl"])
         .select("curl", "lang")
     )
-    with _scoped_sp(spark, 8):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark).filter(~F.col("lang").eqNullSafe("xx")).select("curl")
+    return _drain(deduped, "stream_urldedup_").read(spark).filter(~F.col("lang").eqNullSafe("xx")).select("curl")
 
 
 def _q_pages_salted_skew_counts(spark, sf):
@@ -1211,27 +1068,17 @@ def _q_pages_stream_tumbling(spark, sf):
     all real windows, so the committed sink content equals the batch (and
     DuckDB) recomputation over non-sentinel rows.
     """
-    import tempfile
-
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.topology import (
         TopologyConfig,
-        run_streaming_to_sink,
+        build_windowed_topology,
     )
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_q_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     cfg = TopologyConfig(window_kind="tumbling", watermark="73 hours")
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
-    with _scoped_sp(spark, 8):
-        q = run_streaming_to_sink(
-            stream, cfg, sink, os.path.join(work, "ckpt"), available_now=True
-        )
-        _await_drain(q)
-    return sink.read(spark).filter(~F.col("lang").eqNullSafe("xx"))
+    agg = build_windowed_topology(stream, cfg, streaming=True)
+    return _drain(agg, "stream_q_").read(spark).filter(~F.col("lang").eqNullSafe("xx"))
 
 
 def _q_pages_stream_session(spark, sf):
@@ -1239,56 +1086,36 @@ def _q_pages_stream_session(spark, sf):
     drained via availableNow against the exactly-once sink. Oracle: classic
     gaps-and-islands SQL over the same files (new session when the gap to
     the previous event ≥ 30min — matching session_window's half-open merge)."""
-    import tempfile
-
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.topology import (
         TopologyConfig,
-        run_streaming_to_sink,
+        build_windowed_topology,
     )
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_sess_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     cfg = TopologyConfig(window_kind="session", gap="30 minutes", watermark="73 hours")
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
-    with _scoped_sp(spark, 8):
-        q = run_streaming_to_sink(
-            stream, cfg, sink, os.path.join(work, "ckpt"), available_now=True
-        )
-        _await_drain(q)
-    return sink.read(spark).filter(~F.col("lang").eqNullSafe("xx"))
+    agg = build_windowed_topology(stream, cfg, streaming=True)
+    return _drain(agg, "stream_sess_").read(spark).filter(~F.col("lang").eqNullSafe("xx"))
 
 
 def _q_pages_stream_sliding(spark, sf):
     """Streaming SLIDING windows (10min/5min) end-to-end; oracle = union of
     the two shifted 5-min buckets each row belongs to."""
-    import tempfile
-
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.topology import (
         TopologyConfig,
-        run_streaming_to_sink,
+        build_windowed_topology,
     )
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_slide_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     cfg = TopologyConfig(
         window_kind="sliding", duration="10 minutes", slide="5 minutes",
         watermark="73 hours",
     )
     stream = pages_replay_stream(spark, PAGES_STREAM_DIR, max_files_per_trigger=8)
-    with _scoped_sp(spark, 8):
-        q = run_streaming_to_sink(
-            stream, cfg, sink, os.path.join(work, "ckpt"), available_now=True
-        )
-        _await_drain(q)
-    return sink.read(spark).filter(~F.col("lang").eqNullSafe("xx"))
+    agg = build_windowed_topology(stream, cfg, streaming=True)
+    return _drain(agg, "stream_slide_").read(spark).filter(~F.col("lang").eqNullSafe("xx"))
 
 
 def _q_pages_stream_bursts(spark, sf):
@@ -1296,17 +1123,11 @@ def _q_pages_stream_bursts(spark, sf):
     pages stream: emit (host, t) exactly once when ≥20 pages land within
     [t - 30min, t]. Oracle: batch RANGE-window count (burst-ness is
     monotone in the event multiset — see streaming/cep.py)."""
-    import tempfile
-
     from logflow_spark.operators.windows import with_host
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.cep import detect_bursts
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
-    work = tempfile.mkdtemp(prefix="stream_burst_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = with_host(
         pages_replay_stream(spark, PAGES_SKEW_DIR, max_files_per_trigger=8)
     )
@@ -1316,16 +1137,7 @@ def _q_pages_stream_bursts(spark, sf):
     bursts = detect_bursts(
         stream, n_events=20, window="30 minutes", watermark="73 hours"
     )
-    with _scoped_sp(spark, 8):
-        q = (
-            bursts.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(bursts, "stream_burst_").read(spark)
 
 
 def _q_events_stream_absence(spark, sf):
@@ -1336,30 +1148,15 @@ def _q_events_stream_absence(spark, sf):
     far-future sentinel purchase (user -1) that closes every timer.
     Oracle: the batch funnel_absence forward-RANGE SQL over the same files
     — purchases are never emitted, so the sentinel needs no filtering."""
-    import tempfile
-
     from logflow_spark.fixtures.funnel_events import events_spark_schema
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.absence import detect_absence
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
     schema = events_spark_schema()
-    work = tempfile.mkdtemp(prefix="stream_absence_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = replay_stream(spark, FUNNEL_STREAM_DIR, schema, max_files_per_trigger=8)
     absent = detect_absence(stream, within="30 minutes", watermark="10 minutes")
-    with _scoped_sp(spark, 8):
-        q = (
-            absent.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(absent, "stream_absence_").read(spark)
 
 
 def _q_events_stream_funnel(spark, sf):
@@ -1368,30 +1165,15 @@ def _q_events_stream_funnel(spark, sf):
     final (no earlier purchase can still arrive). Positive twin of
     events_stream_absence over the same replay fixture; oracle: the batch
     funnel_pairs forward-RANGE SQL over the same files."""
-    import tempfile
-
     from logflow_spark.fixtures.funnel_events import events_spark_schema
-    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.sequence import detect_sequence
 
     _ensure_fixtures()
-    tune_for_runtime(spark)
     schema = events_spark_schema()
-    work = tempfile.mkdtemp(prefix="stream_funnel_", dir=CACHE)
-    sink = ExactlyOnceParquetSink(os.path.join(work, "table"))
     stream = replay_stream(spark, FUNNEL_STREAM_DIR, schema, max_files_per_trigger=8)
     pairs = detect_sequence(stream, within="30 minutes", watermark="10 minutes")
-    with _scoped_sp(spark, 8), _scoped_mpb(spark, 1 << 20):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drain(q)
-    return sink.read(spark)
+    return _drain(pairs, "stream_funnel_", max_partition_bytes=1 << 20).read(spark)
 
 
 def _q_log_promote_flags(spark, sf):
@@ -1437,11 +1219,17 @@ def _with_runtime(fn):
     plan, so the operator itself can never unpersist them. Clearing at
     query entry bounds CacheManager growth over the 68-query driver gate
     to one query's persists instead of the whole session's (the drained
-    streaming tables are parquet on disk and unaffected)."""
+    streaming tables are parquet on disk and unaffected).
+
+    And resets spark.sql.files.maxPartitionBytes to the session default:
+    _t() sizes it for the frame it returns, and that frame executes after
+    _t() returns, so _t() cannot restore it. Without the reset every later
+    query scanned with whatever split size the last _t() call left."""
 
     def wrapped(spark: SparkSession, sf: str) -> DataFrame:
         spark.catalog.clearCache()
         tune_for_runtime(spark)
+        spark.sql("RESET spark.sql.files.maxPartitionBytes")
         return fn(spark, sf)
 
     return wrapped

@@ -74,26 +74,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return _extract_text_series(html)
 
 
-def extract_text_arrow_iter(batch_iter):
-    """mapInArrow body: drop `html`, fill null `text` from extraction.
-
-    Same semantics as coalesce(text, extract_text_udf(html)) but at the
-    Arrow layer — only html and text cross into pandas; every other column
-    passes through as Arrow buffers untouched. Used by the topology's
-    extract_mode='arrow' path.
-    """
-    import pyarrow as pa
-
-    for batch in batch_iter:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        html = cols.pop("html").to_pandas()
-        existing = cols["text"].to_pandas().astype("string")
-        extracted = _extract_text_series(html)
-        merged = existing.where(existing.notna(), extracted)
-        cols["text"] = pa.array(merged, type=pa.string(), from_pandas=True)
-        yield pa.RecordBatch.from_pydict(cols)
-
-
 def extract_text_expr(html_col: str | Column = "html") -> Column:
     """JVM-expression twin of extract_text_udf — zero Python boundary.
 

@@ -215,6 +215,7 @@ class CepDetect:
         from logflow_spark.session import get_spark
         from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
         from logflow_spark.sources.replay import pages_replay_stream, replay_stream
+        from logflow_spark.streaming.topology import drain_to_sink
 
         master = f"local[{self.cores}]" if self.cores else None
         spark = get_spark(app_name=f"cep_{self.pattern}", master=master)
@@ -246,14 +247,9 @@ class CepDetect:
                 out = detect_absence(
                     stream, within=self.within, watermark=self.watermark
                 )
-        q = (
-            out.writeStream.outputMode("append")
-            .option("checkpointLocation", os.path.join(self.table_dir, "ckpt"))
-            .foreachBatch(sink.foreach_batch())
-            .trigger(availableNow=True)
-            .start()
+        drain_to_sink(
+            out, sink, os.path.join(self.table_dir, "ckpt"), timeout_s=None
         )
-        q.awaitTermination()
         return sink.metrics()
 
 

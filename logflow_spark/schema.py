@@ -30,6 +30,17 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+# Documents replay stream (fixtures/docs_stream.py): the driver's
+# `documents` corpus with a deterministic ingest time per doc.
+DOCS_STREAM_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("ingest_ts", TimestampType(), False),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+    ]
+)
+
 # Per-host enrichment stream (right side of the stateful join).
 HOST_ENRICHMENT_SCHEMA = StructType(
     [

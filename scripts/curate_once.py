@@ -22,6 +22,7 @@ from logflow_spark.session import get_spark
 from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
 from logflow_spark.sources.replay import pages_replay_stream
 from logflow_spark.streaming.curation_stream import streaming_curate
+from logflow_spark.streaming.topology import drain_to_sink
 
 cores = int(sys.argv[1])
 fx = sys.argv[2]
@@ -54,14 +55,7 @@ t0 = time.time()
 mfpt = int(os.environ.get("DRAIN_MFPT", 64))
 stream = pages_replay_stream(spark, fx, max_files_per_trigger=mfpt)
 kept = streaming_curate(stream, watermark="73 hours")
-q = (
-    kept.writeStream.outputMode("append")
-    .option("checkpointLocation", os.path.join(work, "c"))
-    .foreachBatch(sink.foreach_batch())
-    .trigger(availableNow=True)
-    .start()
-)
-q.awaitTermination()
+q = drain_to_sink(kept, sink, os.path.join(work, "c"), timeout_s=None)
 dt = time.time() - t0
 
 import json as _json

@@ -32,8 +32,8 @@ if not os.path.exists(os.path.join(staged, "_SUCCESS")):
     shutil.copytree(fx, staged)
 fx = staged
 
-# DRAIN_EXTRACT: udf (Arrow pandas UDF, default) | arrow (mapInArrow) |
-# jvm (built-in-expression twin) — all byte-identical per url
+# DRAIN_EXTRACT: udf (Arrow pandas UDF, default) | jvm (built-in-expression
+# twin) — byte-identical per url
 extract_mode = os.environ.get("DRAIN_EXTRACT", "udf")
 cfg = TopologyConfig(
     window_kind="tumbling",

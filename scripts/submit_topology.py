@@ -6,7 +6,7 @@ shape):
       --py-files dist/logflow_spark.zip \\
       scripts/submit_topology.py \\
       --input <pages dir> --table <table dir> \\
-      [--window tumbling] [--watermark "30 minutes"] [--extract udf|arrow|jvm] \\
+      [--window tumbling] [--watermark "30 minutes"] [--extract udf|jvm] \\
       [--drain]
 
 Uses the ambient SparkSession (whatever --master/--conf the submitter chose)
@@ -27,7 +27,7 @@ def main() -> None:
     ap.add_argument("--table", required=True)
     ap.add_argument("--window", default="tumbling")
     ap.add_argument("--watermark", default="30 minutes")
-    ap.add_argument("--extract", default="udf", choices=("udf", "arrow", "jvm"))
+    ap.add_argument("--extract", default="udf", choices=("udf", "jvm"))
     ap.add_argument("--drain", action="store_true", help="availableNow drain + stop")
     args = ap.parse_args()
 

@@ -80,3 +80,16 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(df.columns) == {"window_start", "window_end", "event_type", "cnt"}
+
+
+def test_query_starts_from_session_scan_split(spark):
+    """A query that never calls _t() scans with the session's split size,
+    whatever _t() query ran before it in the same session."""
+    key = "spark.sql.files.maxPartitionBytes"
+    seen = []
+    probe = entrymod._with_runtime(lambda s, sf: seen.append(s.conf.get(key)))
+    probe(spark, SF_DIR)
+    entrymod.queries()["text_profile"](spark, SF_DIR)  # _t() resizes the split
+    assert spark.conf.get(key) != seen[0]
+    probe(spark, SF_DIR)
+    assert seen[1] == seen[0]

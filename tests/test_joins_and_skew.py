@@ -15,11 +15,13 @@ from logflow_spark.operators.asof_join import (
 )
 from logflow_spark.operators.skew import salted_counts, salted_sum
 from logflow_spark.operators.windows import with_host
+from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
 from logflow_spark.sources.replay import replay_stream
 from logflow_spark.streaming.stateful_join import (
     MERGED_SCHEMA,
     AsofEnrichJoin,
 )
+from logflow_spark.streaming.topology import drain_to_sink
 
 from tests.conftest import CACHE
 
@@ -91,19 +93,12 @@ def test_stateful_asof_join_matches_batch_oracle(spark):
 
     stream = replay_stream(spark, merged_dir, MERGED_SCHEMA, max_files_per_trigger=1)
     joined = AsofEnrichJoin.apply(stream, watermark="73 hours")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    sink = ExactlyOnceParquetSink(out_dir)
+    drain_to_sink(joined, sink, ckpt)
 
     got = {
         (r["url"], r["enrich_ts"], r["category"], r["score"])
-        for r in spark.read.parquet(out_dir).collect()
+        for r in sink.read(spark).collect()
     }
     pages, enr = _pages_enrichment(spark)
     exp = {
@@ -130,16 +125,9 @@ def test_streaming_interval_join_matches_batch(spark, pages_dir, enrichment_dir)
     joined = watermarked_interval_join(
         p_stream, e_stream, "73 hours", "73 hours", lookback="1 hour"
     ).select("url", "warc_ts", "enrich_ts", "category", "score")
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
+    sink = ExactlyOnceParquetSink(out_dir)
+    drain_to_sink(joined, sink, ckpt)
+    got = {tuple(r) for r in sink.read(spark).collect()}
 
     batch_pages = with_host(spark.read.schema(PAGES_SCHEMA).parquet(pages_dir))
     batch_enr = spark.read.schema(HOST_ENRICHMENT_SCHEMA).parquet(enrichment_dir)

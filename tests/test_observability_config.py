@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from types import SimpleNamespace
 
 import pytest
 
@@ -15,6 +16,7 @@ from logflow_spark.streaming.observability import (
     fanout_foreach_batch,
     with_observed_metrics,
 )
+from logflow_spark.streaming.topology import drain_to_sink
 
 from tests.conftest import CACHE
 
@@ -37,16 +39,8 @@ def test_observed_metrics_and_fanout(spark, pages_dir):
         stream = with_observed_metrics(
             pages_replay_stream(spark, pages_dir, max_files_per_trigger=4)
         )
-        q = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(
-                fanout_foreach_batch([sink_a.foreach_batch(), sink_b.foreach_batch()])
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        fanout = fanout_foreach_batch([sink_a.foreach_batch(), sink_b.foreach_batch()])
+        drain_to_sink(stream, SimpleNamespace(foreach_batch=lambda: fanout), ckpt)
 
         n_a = sink_a.metrics()["total_rows"]
         n_b = sink_b.metrics()["total_rows"]

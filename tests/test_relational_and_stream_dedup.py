@@ -113,8 +113,10 @@ def test_cep_bursts_arrival_order_independent(spark):
 
     from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
+    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.cep import detect_bursts
+    from logflow_spark.streaming.topology import drain_to_sink
     from tests.conftest import CACHE
 
     base = pd.Timestamp("2025-03-01 00:00:00")
@@ -158,17 +160,9 @@ def test_cep_bursts_arrival_order_independent(spark):
         ]
     )
     stream = replay_stream(spark, fx, spark_schema, max_files_per_trigger=1)
-    q = (
-        detect_bursts(stream, n_events=20, window="30 minutes")
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {(r["host"], r["burst_ts"]) for r in spark.read.parquet(out_dir).collect()}
+    sink = ExactlyOnceParquetSink(out_dir)
+    drain_to_sink(detect_bursts(stream, n_events=20, window="30 minutes"), sink, ckpt)
+    got = {(r["host"], r["burst_ts"]) for r in sink.read(spark).collect()}
 
     con = duckdb.connect()
     con.register("p", pdf)
@@ -198,8 +192,10 @@ def test_streaming_dedup_matches_batch_distinct(spark, pages_dir):
 
     from logflow_spark.operators.dedup import md5_60bit
     from logflow_spark.schema import PAGES_SCHEMA
+    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import pages_replay_stream
     from logflow_spark.streaming.stream_dedup import streaming_distinct_digests
+    from logflow_spark.streaming.topology import drain_to_sink
     from tests.conftest import CACHE
 
     ckpt = os.path.join(CACHE, "sdedup_ckpt")
@@ -208,17 +204,9 @@ def test_streaming_dedup_matches_batch_distinct(spark, pages_dir):
         shutil.rmtree(p, ignore_errors=True)
 
     stream = pages_replay_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = (
-        streaming_distinct_digests(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {r["digest"] for r in spark.read.parquet(out_dir).collect()}
+    sink = ExactlyOnceParquetSink(out_dir)
+    drain_to_sink(streaming_distinct_digests(stream), sink, ckpt)
+    got = {r["digest"] for r in sink.read(spark).collect()}
     batch = spark.read.schema(PAGES_SCHEMA).parquet(pages_dir)
     exp = {
         r["digest"]

@@ -198,7 +198,7 @@ def test_inverted_index_candidates_bounded_by_max_df(spark):
     assert guarded == n // 2  # only the rare-shingle partner pairs survive
 
 
-# -- extraction modes: udf / arrow / jvm are byte-identical --------------------
+# -- extraction modes: udf / jvm are byte-identical ---------------------------
 EDGE_HTMLS = [
     None,
     b"<html><head></head><body></body></html>",  # no title, no paras
@@ -211,9 +211,9 @@ EDGE_HTMLS = [
 
 
 def test_extraction_modes_byte_identical(spark):
-    """The three extraction paths (pandas UDF / mapInArrow / JVM expression)
-    must all equal the pure-Python oracle byte-for-byte — the north-rule
-    per-row invariant, preserved across the perf paths."""
+    """Both extraction paths (pandas UDF / JVM expression) must equal the
+    pure-Python oracle byte-for-byte — the north-rule per-row invariant,
+    preserved across the perf paths."""
     import pandas as pd
 
     from logflow_spark.fixtures.pages import pages_spark_df
@@ -242,13 +242,15 @@ def test_extraction_modes_byte_identical(spark):
     fixture_exp = {
         (r["url"], extract_text_py(r["html"])) for r in both.collect()
     }
-    for mode in ("udf", "arrow", "jvm"):
+    for mode in ("udf", "jvm"):
         cfg = TopologyConfig(extract_mode=mode)
         got = {
             (r["url"], r["text"])
             for r in parse_and_enrich(both, cfg).select("url", "text").collect()
         }
         assert got == fixture_exp, f"extract_mode={mode} diverges from oracle"
+    with pytest.raises(ValueError):
+        parse_and_enrich(both, TopologyConfig(extract_mode="arrow"))
 
 
 def test_jvm_extraction_has_no_python_boundary(spark):
@@ -277,8 +279,10 @@ def test_stateful_asof_join_chunk_independent(spark):
     from logflow_spark.fixtures.pages import pages_spark_df
     from logflow_spark.operators.asof_join import asof_join_pages_enrichment
     from logflow_spark.operators.windows import with_host
+    from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
     from logflow_spark.sources.replay import replay_stream
     from logflow_spark.streaming.stateful_join import MERGED_SCHEMA, AsofEnrichJoin
+    from logflow_spark.streaming.topology import drain_to_sink
 
     n_pages, n_hosts = 1500, 5  # ~300 rows/host/batch >> 50-row Arrow chunks
     merged_dir = ensure_merged_join_fixture(
@@ -297,21 +301,14 @@ def test_stateful_asof_join_chunk_independent(spark):
     try:
         stream = replay_stream(spark, merged_dir, MERGED_SCHEMA, max_files_per_trigger=1)
         joined = AsofEnrichJoin.apply(stream, watermark="73 hours")
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        sink = ExactlyOnceParquetSink(out_dir)
+        drain_to_sink(joined, sink, ckpt)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
     got = {
         (r["url"], r["enrich_ts"], r["category"], r["score"])
-        for r in spark.read.parquet(out_dir).collect()
+        for r in sink.read(spark).collect()
     }
     pages = with_host(pages_spark_df(spark, n_pages, n_hosts=n_hosts))
     enr = spark.createDataFrame(enrichment_pandas(n_hosts))

@@ -12,8 +12,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from logflow_spark.fixtures.merged_join import MERGED_ARROW_SCHEMA
+from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
 from logflow_spark.sources.replay import replay_stream
 from logflow_spark.streaming.stateful_join import MERGED_SCHEMA, AsofEnrichJoin
+from logflow_spark.streaming.topology import drain_to_sink
 
 from tests.conftest import CACHE
 
@@ -54,16 +56,9 @@ def _run(spark, merged_dir, ttl_ms, watermark):
         shutil.rmtree(p, ignore_errors=True)
     stream = replay_stream(spark, merged_dir, MERGED_SCHEMA, max_files_per_trigger=1)
     joined = AsofEnrichJoin.apply(stream, watermark=watermark, state_ttl_ms=ttl_ms)
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return {r["url"]: r for r in spark.read.parquet(out).collect()}
+    sink = ExactlyOnceParquetSink(out)
+    drain_to_sink(joined, sink, ckpt)
+    return {r["url"]: r for r in sink.read(spark).collect()}
 
 
 def test_idle_host_state_evicted_after_ttl(spark):

@@ -13,29 +13,14 @@ import os
 import shutil
 
 import pandas as pd
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from logflow_spark.operators.decontam import _gram_hashes, decontaminate
+from logflow_spark.schema import DOCS_STREAM_SCHEMA
 from logflow_spark.sources.replay import replay_stream
 from logflow_spark.streaming.decontam_stream import streaming_decontaminate
 from tests.conftest import CACHE
 
 BASE = pd.Timestamp("2025-06-01 00:00:00")
-
-SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("ingest_ts", TimestampType(), False),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-    ]
-)
 
 SNIPPET = " ".join(f"e{k}" for k in range(8))  # one exact 8-gram
 
@@ -91,7 +76,7 @@ def _bench(spark):
 def _drain(spark, fx: str, name: str):
     ckpt = os.path.join(CACHE, f"{name}_ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
-    stream = replay_stream(spark, fx, SCHEMA, max_files_per_trigger=8)
+    stream = replay_stream(spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=8)
     report = streaming_decontaminate(
         stream, _bench(spark), watermark="1 hour", window="1 hour"
     )
@@ -148,7 +133,7 @@ def test_decontam_crash_resume_exactly_once(spark):
         calls["n"] += 1
 
     def stream():
-        s = replay_stream(spark, fx, SCHEMA, max_files_per_trigger=1)
+        s = replay_stream(spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=1)
         return streaming_decontaminate(
             s, _bench(spark), watermark="1 hour", window="1 hour"
         )

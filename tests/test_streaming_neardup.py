@@ -19,14 +19,8 @@ import shutil
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
+from logflow_spark.schema import DOCS_STREAM_SCHEMA
 from logflow_spark.sinks.exactly_once import ExactlyOnceParquetSink
 from logflow_spark.sources.replay import replay_stream
 from logflow_spark.streaming.neardup_stream import (
@@ -39,14 +33,6 @@ from logflow_spark.streaming.neardup_stream import (
 from tests.conftest import CACHE
 
 BASE = pd.Timestamp("2025-06-01 00:00:00")
-
-DOCS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("ingest_ts", TimestampType(), False),
-        StructField("text", StringType(), True),
-    ]
-)
 
 
 def _family_text(f: int, variant: int) -> str:
@@ -70,6 +56,7 @@ def _scenario() -> pd.DataFrame:
                     "doc_id": did,
                     "ingest_ts": BASE + pd.Timedelta(minutes=off_min),
                     "text": _family_text(f, v),
+                    "lang": "en",
                 }
             )
             did += 1
@@ -81,7 +68,7 @@ def _expected_pairs(spark, pdf: pd.DataFrame, horizon_s: int) -> set:
     pure-Python band match and |ts diff| <= horizon rule."""
     sigs = {
         r["doc_id"]: list(r["sig"])
-        for r in with_minhash_sig(spark.createDataFrame(pdf, DOCS_SCHEMA))
+        for r in with_minhash_sig(spark.createDataFrame(pdf, DOCS_STREAM_SCHEMA))
         .filter(F.col("sig").isNotNull())
         .select("doc_id", "sig")
         .collect()
@@ -121,7 +108,7 @@ def _write_chunks(name: str, chunks: list[pd.DataFrame]) -> str:
 def _drain(spark, fx: str, name: str, horizon: str, watermark: str):
     ckpt = os.path.join(CACHE, f"{name}_ckpt")
     shutil.rmtree(ckpt, ignore_errors=True)
-    stream = replay_stream(spark, fx, DOCS_SCHEMA, max_files_per_trigger=1)
+    stream = replay_stream(spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=1)
     pairs = streaming_lsh_neardup(
         stream, id_col="doc_id", ts_col="ingest_ts",
         horizon=horizon, watermark=watermark,
@@ -204,7 +191,7 @@ def test_neardup_bounded_state_and_in_order_drain(spark):
     chunks.append(
         pd.DataFrame(
             [{"doc_id": -1, "ingest_ts": BASE + pd.Timedelta(days=30),
-              "text": "flush"}]
+              "text": "flush", "lang": "xx"}]
         )
     )
     fx = _write_chunks("neardup_bound_fx", chunks)
@@ -249,7 +236,7 @@ def test_neardup_crash_resume_exactly_once(spark):
         calls["n"] += 1
 
     def stream():
-        s = replay_stream(spark, fx, DOCS_SCHEMA, max_files_per_trigger=1)
+        s = replay_stream(spark, fx, DOCS_STREAM_SCHEMA, max_files_per_trigger=1)
         return streaming_lsh_neardup(
             s, id_col="doc_id", ts_col="ingest_ts",
             horizon="1 hour", watermark="10 days",

@@ -7,6 +7,7 @@ late-data drop, and the streaming output equals the batch recomputation.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -20,7 +21,7 @@ from logflow_spark.sources.replay import pages_replay_stream
 from logflow_spark.streaming.topology import (
     TopologyConfig,
     build_windowed_topology,
-    run_streaming_to_sink,
+    drain_to_sink,
 )
 
 from tests.conftest import CACHE
@@ -55,8 +56,7 @@ def test_streaming_equals_batch(spark, pages_dir, kind):
     sink = ExactlyOnceParquetSink(_fresh(os.path.join(CACHE, f"eq_{kind}_sink")))
     ckpt = _fresh(os.path.join(CACHE, f"eq_{kind}_ckpt"))
     stream = pages_replay_stream(spark, pages_dir, max_files_per_trigger=2)
-    q = run_streaming_to_sink(stream, cfg, sink, ckpt, available_now=True)
-    q.awaitTermination(300)
+    drain_to_sink(build_windowed_topology(stream, cfg, streaming=True), sink, ckpt)
 
     got = _rows_set(sink.read(spark))
     assert got == expected
@@ -84,8 +84,7 @@ def test_late_data_dropped(spark, pages_late_dir, pages_dir):
     sink = ExactlyOnceParquetSink(_fresh(os.path.join(CACHE, "late_sink")))
     ckpt = _fresh(os.path.join(CACHE, "late_ckpt"))
     stream = pages_replay_stream(spark, pages_late_dir, max_files_per_trigger=1)
-    q = run_streaming_to_sink(stream, cfg, sink, ckpt, available_now=True)
-    q.awaitTermination(300)
+    drain_to_sink(build_windowed_topology(stream, cfg, streaming=True), sink, ckpt)
 
     out = sink.read(spark).filter(F.col("lang") != "xx")
     n_streamed = out.agg(F.sum("cnt")).collect()[0][0]
@@ -140,8 +139,7 @@ def test_exactly_once_replay_and_resume(spark, pages_dir):
     # Phase 2: restart from the same checkpoint with the healthy sink.
     # Spark replays the failed batch_id; write_batch is idempotent.
     stream2 = pages_replay_stream(spark, pages_dir, max_files_per_trigger=1)
-    q2 = run_streaming_to_sink(stream2, cfg, sink, ckpt, available_now=True)
-    q2.awaitTermination(300)
+    drain_to_sink(build_windowed_topology(stream2, cfg, streaming=True), sink, ckpt)
 
     got = _rows_set(sink.read(spark))
     assert got == expected
@@ -158,3 +156,32 @@ def test_idempotent_batch_rewrite(spark, pages_dir):
     m2 = sink.metrics()
     assert m1 == m2
     assert sink.read(spark).count() == 100
+
+
+def test_drain_to_sink_restores_confs_and_fails_loudly(spark, pages_dir):
+    """drain_to_sink scopes both confs across start and wait and restores
+    them on every exit path; an overrun stops the query and raises."""
+    sp, mpb = "spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes"
+    before = (spark.conf.get(sp), spark.conf.get(mpb))
+    cfg = TopologyConfig(window_kind="tumbling", watermark="73 hours")
+
+    def drain(name, **kw):
+        sink = ExactlyOnceParquetSink(_fresh(os.path.join(CACHE, f"{name}_sink")))
+        ckpt = _fresh(os.path.join(CACHE, f"{name}_ckpt"))
+        stream = pages_replay_stream(spark, pages_dir, max_files_per_trigger=8)
+        agg = build_windowed_topology(stream, cfg, streaming=True)
+        return sink, drain_to_sink(
+            agg, sink, ckpt, state_partitions=3, max_partition_bytes=1 << 20, **kw
+        )
+
+    sink, q = drain("scoped")
+    assert not q.isActive
+    assert sink.metrics()["total_rows"] > 0
+    last = json.loads(q.recentProgress[-1].json)
+    assert last["stateOperators"][0]["numShufflePartitions"] == 3
+    assert (spark.conf.get(sp), spark.conf.get(mpb)) == before
+
+    with pytest.raises(TimeoutError):
+        drain("overrun", timeout_s=0.001)
+    assert spark.streams.active == []
+    assert (spark.conf.get(sp), spark.conf.get(mpb)) == before
